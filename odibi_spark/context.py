@@ -12,6 +12,10 @@ Semantics reproduced (Spark-first) from the reference:
   rewrites the token ``df`` to that view, then runs ``spark.sql``
   (reference: odibi/context.py:32-128, unique names :20-29, rewrite :118).
   Unique names make parallel node execution on one SparkSession safe.
+- ``Context.materialize``: the one way a pipeline run keeps an
+  intermediate frame. Each ``Pipeline`` owns its ``Context``, so the
+  frames it materialized (and the lock guarding them) are per run; the
+  runner calls ``release_materialized`` when the run returns.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ import itertools
 import re
 import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 _counter = itertools.count()
@@ -37,6 +42,7 @@ class Context:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._datasets: dict[str, DataFrame] = {}
+        self._materialized: list[DataFrame] = []
         self._lock = threading.Lock()
 
     def register(self, name: str, df: DataFrame) -> None:
@@ -69,6 +75,30 @@ class Context:
         with self._lock:
             self._datasets.pop(name, None)
         self.spark.catalog.dropTempView(name)
+
+    def materialize(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` (MEMORY_AND_DISK) until ``release_materialized``.
+
+        The blocks fill on the first action that reads ``df`` or a
+        filter/projection of it; every later action reads them instead
+        of recomputing the plan. Persist keeps the lineage, so blocks
+        lost with an executor are recomputed rather than failing the job
+        (a localCheckpoint would fail). A frame that is already cached
+        is returned as is and left to its owner.
+        """
+        if df.storageLevel != StorageLevel.NONE:
+            return df
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        with self._lock:
+            self._materialized.append(df)
+        return df
+
+    def release_materialized(self) -> None:
+        """Unpersist every frame ``materialize`` kept."""
+        with self._lock:
+            frames, self._materialized = self._materialized, []
+        for df in frames:
+            df.unpersist()
 
 
 class EngineContext:
@@ -108,5 +138,8 @@ class EngineContext:
             return self.with_df(out)
         finally:
             # The analyzed plan holds the resolved relation; the view
-            # name itself is no longer needed.
-            self.spark.catalog.dropTempView(view)
+            # name itself is no longer needed. Drop it through the
+            # session catalog: ``spark.catalog.dropTempView`` also
+            # uncaches every cached plan equal to the view's, which
+            # would unpersist a materialized input frame.
+            self.spark._jsparkSession.sessionState().catalog().dropTempView(view)

@@ -6,11 +6,23 @@ Scale design: every dimension lookup is a BROADCAST left join
 (dimensions are small relative to facts; the reference does plain
 joins — SURVEY §2.4 flags the missing hint). Grain validation is a
 window count over the grain — one shuffle, no self-join.
+
+The build is two steps: ``grade_fact`` (dedup, lookups, measures and
+the ``__grain_n`` window) and ``split_fact`` (clean vs quarantined
+rows). The graded frame is the fork: both halves, and everything a
+pipeline does with the clean rows afterwards, read it. ``build_fact``
+hands it to an optional ``materialize`` hook between the steps;
+``NodeExecutor`` passes its run-scoped ``Context.materialize`` there
+when the quarantine is written, so the lookups and the window run once
+per node, and the frame is released when the pipeline run returns.
+Without the hook (standalone callers) both halves stay lazy and
+nothing is persisted.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
@@ -41,9 +53,35 @@ def build_fact(
     measures: dict[str, str] | None = None,
     dedup_order_by: list[str] | None = None,
     validate_grain: bool = True,
+    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (fact_rows, quarantined_rows). Quarantine holds grain
-    violations (reference :666-704) with a ``_quarantine_reason`` col."""
+    violations (reference :666-704) with a ``_quarantine_reason`` col.
+
+    ``materialize`` is applied to the graded frame before it forks into
+    the two halves (only when the grain is validated: otherwise there
+    is no fork)."""
+    graded = grade_fact(
+        fact, grain=grain, lookups=lookups, measures=measures,
+        dedup_order_by=dedup_order_by, validate_grain=validate_grain,
+    )
+    if materialize is not None and validate_grain:
+        graded = materialize(graded)
+    return split_fact(graded, validate_grain=validate_grain)
+
+
+def grade_fact(
+    fact: DataFrame,
+    *,
+    grain: list[str],
+    lookups: list[DimensionLookup] = (),
+    measures: dict[str, str] | None = None,
+    dedup_order_by: list[str] | None = None,
+    validate_grain: bool = True,
+) -> DataFrame:
+    """Dedup, surrogate-key lookups and measures; with
+    ``validate_grain`` also a ``__grain_n`` column counting the rows
+    that share each row's grain."""
     df = fact
     if dedup_order_by:
         w = Window.partitionBy(*grain).orderBy(*[F.col(c).desc() for c in dedup_order_by])
@@ -56,17 +94,25 @@ def build_fact(
         df = df.withColumn(name, F.expr(expr))
 
     if validate_grain:
-        w = Window.partitionBy(*grain)
-        df = df.withColumn("__grain_n", F.count(F.lit(1)).over(w))
-        quarantined = (
-            df.filter("__grain_n > 1")
-            .drop("__grain_n")
-            .withColumn("_quarantine_reason", F.lit("grain_violation"))
-            .withColumn("_quarantined_at", F.current_timestamp())
-        )
-        clean = df.filter("__grain_n = 1").drop("__grain_n")
-        return clean, quarantined
-    return df, df.sparkSession.createDataFrame([], df.schema)
+        df = df.withColumn("__grain_n", F.count(F.lit(1)).over(Window.partitionBy(*grain)))
+    return df
+
+
+def split_fact(
+    graded: DataFrame, *, validate_grain: bool = True
+) -> tuple[DataFrame, DataFrame]:
+    """(clean, quarantined) rows of a ``grade_fact`` frame: rows whose
+    grain is unique, and grain violators stamped with a reason."""
+    if not validate_grain:
+        return graded, graded.sparkSession.createDataFrame([], graded.schema)
+    quarantined = (
+        graded.filter("__grain_n > 1")
+        .drop("__grain_n")
+        .withColumn("_quarantine_reason", F.lit("grain_violation"))
+        .withColumn("_quarantined_at", F.current_timestamp())
+    )
+    clean = graded.filter("__grain_n = 1").drop("__grain_n")
+    return clean, quarantined
 
 
 def _apply_lookup(df: DataFrame, lk: DimensionLookup) -> DataFrame:

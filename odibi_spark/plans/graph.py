@@ -92,7 +92,8 @@ class DependencyGraph:
         return [sorted(layer) for layer in out]
 
     def consumers_count(self) -> dict[str, int]:
-        """How many nodes consume each node — drives auto-caching of
+        """How many nodes consume each node — drives where a run
+        materializes node frames, including the auto-caching of
         multiply-consumed outputs (reference: pipeline.py:1843-1908)."""
         counts = dict.fromkeys(self.deps, 0)
         for ds in self.deps.values():

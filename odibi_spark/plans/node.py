@@ -1,6 +1,27 @@
 """Node lifecycle (reference: odibi/node.py:173-462 execute; phases
 :222-392): read (or dependency input) -> transform chain -> validation
 (+quarantine/gate) -> write -> register output in context.
+
+Materialization: one per node lineage. A frame is materialized (through
+``Context.materialize``: persist MEMORY_AND_DISK, lineage kept) at the
+node's first fork, the first point where two or more actions read it:
+
+1. a fact pattern with a quarantine path: the graded frame, before it
+   splits into clean and grain-violating rows;
+2. otherwise the validation input, when a write, a quarantine write or
+   a downstream node reads it after the validation aggregate;
+3. otherwise, with ``cache: true`` or the pipeline's ``auto_cache`` of
+   a multiply-consumed output, the output, before the write.
+
+Everything after the fork is a filter or projection of that frame, so
+the validation aggregate, both quarantine writes, the main write and
+downstream nodes all read its blocks, and the write fills them before
+any consumer runs. ``Pipeline.run``/``run_node`` release every frame
+when they return, failed nodes included. Input contracts and the HWM
+capture are deliberately NOT materialized: each is a column-pruned
+aggregate that reads a few columns, far cheaper at scale than writing
+every column of the input to executor storage (see
+``_check_contracts``).
 """
 
 from __future__ import annotations
@@ -53,10 +74,32 @@ class NodeResult:
 
 
 class NodeExecutor:
-    def __init__(self, config: NodeConfig, context: Context, connections: dict | None = None):
+    def __init__(
+        self,
+        config: NodeConfig,
+        context: Context,
+        connections: dict | None = None,
+        *,
+        consumers: int = 0,
+        cache_output: bool = False,
+    ):
+        """``consumers``: downstream nodes of this run that read the
+        registered output. ``cache_output``: materialize the output
+        before the write, as ``cache: true`` does."""
         self.config = config
         self.context = context
         self.connections = connections or {}
+        self.consumers = consumers
+        self.cache_output = cache_output
+        self._materialized = False
+
+    def _materialize_once(self, df: DataFrame) -> DataFrame:
+        """Materialize ``df`` at a fork unless this node already
+        materialized a frame it derives from (see the module doc)."""
+        if self._materialized:
+            return df
+        self._materialized = True
+        return self.context.materialize(df)
 
     def _resolve(self, conn_name: str | None, path: str | None, table: str | None, options: dict):
         """Apply a named connection: resolve path/table, merge options,
@@ -84,7 +127,6 @@ class NodeExecutor:
         t0 = _time.monotonic()
         cfg = self.config
         spark = self.context.spark
-        contract_cached = None
         val_results: list[Any] = []
         try:
             # ---- pre_sql (reference: config.py:4720-4723 — e.g. SET confs)
@@ -137,7 +179,7 @@ class NodeExecutor:
             # one column-pruned aggregate pass (see _check_contracts
             # for why the input is NOT persisted)
             if cfg.contracts:
-                df, contract_cached = self._check_contracts(df, cfg.contracts)
+                df, _ = self._check_contracts(df, cfg.contracts)
 
             # ---- transform chain
             if df is not None:
@@ -169,6 +211,8 @@ class NodeExecutor:
             # ---- validation phase
             gate_warnings: list[str] = []
             if cfg.validation and cfg.validation.tests:
+                if cfg.write or cfg.validation.quarantine_path or self.consumers:
+                    df = self._materialize_once(df)
                 outcome = run_validation(
                     df, [t.to_dict() for t in cfg.validation.tests]
                 )
@@ -194,8 +238,8 @@ class NodeExecutor:
                     names = ", ".join(r.name for r in hard_fails)
                     raise ValueError(f"validation failed: {names}")
 
-            if cfg.cache:
-                df = df.cache()
+            if cfg.cache or self.cache_output:
+                df = self._materialize_once(df)
 
             # ---- capture HWM before the write (committed only after)
             new_hwm = None
@@ -292,11 +336,6 @@ class NodeExecutor:
                 validation=val_results,
                 duration_s=round(_time.monotonic() - t0, 3),
             )
-        finally:
-            if contract_cached is not None:
-                # input cache served the contract pass + transform/write;
-                # downstream consumers use the registered OUTPUT frame
-                contract_cached.unpersist()
 
     def _apply_pattern(self, df):
         """Dispatch a warehouse pattern (reference node.py:1580-1624).
@@ -356,10 +395,12 @@ class NodeExecutor:
             )
             for lk in (params.pop("lookups", None) or [])
         ]
-        clean, quarantined = build_fact(df, lookups=lookups, **params)
-        if quarantine_path and quarantined is not None:
-            from odibi_spark.io import write_sink
-
+        clean, quarantined = build_fact(
+            df, lookups=lookups,
+            materialize=self._materialize_once if quarantine_path else None,
+            **params,
+        )
+        if quarantine_path:
             write_sink(quarantined, path=quarantine_path, mode="append")
         return clean
 
@@ -418,8 +459,8 @@ class NodeExecutor:
         (persist = full write + full read) is far more expensive than
         the pruned scan it would save.
 
-        Returns (df, cached_frame_or_None); the caller unpersists any
-        cache after the write (None in the current strategy).
+        Returns (df, None): the second slot is kept for callers that
+        unpack a pair; the input is never persisted.
         """
         import datetime
 

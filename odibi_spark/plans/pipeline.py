@@ -6,6 +6,10 @@ Thread-safety: nodes share one SparkSession; temp-view registration
 uses node names (unique per pipeline) and raw-SQL steps use
 thread-unique view names (context.py), matching the reference's
 concurrency discipline (odibi/context.py:20-29).
+
+Every frame a run materializes (node.py's one-per-lineage rule) lives on
+this pipeline's Context and is released when ``run``/``run_node``
+returns, whether the nodes succeeded or not.
 """
 
 from __future__ import annotations
@@ -60,14 +64,16 @@ class Pipeline:
         auto_cache: bool = True,
         resume_from: dict[str, NodeResult] | None = None,
     ) -> dict[str, NodeResult]:
-        """``auto_cache``: persist outputs consumed by >1 downstream node
-        (reference: pipeline.py:1843-1908 auto-cache heuristic).
+        """``auto_cache``: materialize outputs consumed by >1 downstream
+        node before their write, so the write fills the blocks the
+        consumers read (reference: pipeline.py:1843-1908 auto-cache
+        heuristic).
         ``resume_from``: results of a previous run — nodes that already
         succeeded are re-registered from their written targets (or
         re-executed if they have no physical target) and not re-run
         (reference resume-from-failure: pipeline.py:581-599)."""
         results: dict[str, NodeResult] = {}
-        consumers = self.graph.consumers_count() if auto_cache else {}
+        consumers = self.graph.consumers_count()
         t0 = time.monotonic()
         self._alert("on_start", results, 0.0)
 
@@ -102,27 +108,28 @@ class Pipeline:
             max_retries = max(retries, self._nodes[name].retries)
             while True:
                 r = NodeExecutor(
-                    self._nodes[name], self.context, self.connections
+                    self._nodes[name], self.context, self.connections,
+                    consumers=consumers[name],
+                    cache_output=auto_cache and consumers[name] > 1,
                 ).execute()
-                if r.status == "success" and consumers.get(name, 0) > 1:
-                    # multiply-consumed output: persist so each consumer
-                    # doesn't recompute the whole upstream plan
-                    self.context.register(name, self.context.get(name).cache())
                 if r.status == "success" or attempt >= max_retries:
                     return r
                 attempt += 1
                 time.sleep(retry_backoff_s * attempt)
 
-        if parallel:
-            for layer in self.graph.layers():
-                with ThreadPoolExecutor(
-                    max_workers=min(self.config.max_workers, len(layer))
-                ) as pool:
-                    for name, res in zip(layer, pool.map(execute, layer)):
-                        results[name] = res
-        else:
-            for name in self.graph.toposort():
-                results[name] = execute(name)
+        try:
+            if parallel:
+                for layer in self.graph.layers():
+                    with ThreadPoolExecutor(
+                        max_workers=min(self.config.max_workers, len(layer))
+                    ) as pool:
+                        for name, res in zip(layer, pool.map(execute, layer)):
+                            results[name] = res
+            else:
+                for name in self.graph.toposort():
+                    results[name] = execute(name)
+        finally:
+            self.context.release_materialized()
         failed = any(r.status != "success" for r in results.values())
         elapsed = time.monotonic() - t0
         # quality events BEFORE the lifecycle terminal event (reference
@@ -172,12 +179,15 @@ class Pipeline:
             self.context.register(dep, self.spark.read.parquet(w_path))
         attempt = 0
         max_retries = max(retries, cfg.retries)
-        while True:
-            r = NodeExecutor(cfg, self.context, self.connections).execute()
-            if r.status == "success" or attempt >= max_retries:
-                return r
-            attempt += 1
-            time.sleep(attempt)
+        try:
+            while True:
+                r = NodeExecutor(cfg, self.context, self.connections).execute()
+                if r.status == "success" or attempt >= max_retries:
+                    return r
+                attempt += 1
+                time.sleep(attempt)
+        finally:
+            self.context.release_materialized()
 
     def _alert(self, event: str, results: dict[str, NodeResult], duration_s: float):
         """Fire configured alerts for a lifecycle event (reference:

@@ -10,6 +10,11 @@ built once with scale-aware defaults:
 - Arrow enabled for every pandas interchange (Pandas UDFs, toPandas).
 - Session timezone pinned to UTC so timestamp semantics are stable and
   comparable against external oracles.
+- AQE may re-partition cached plans
+  (``canChangeCachedPlanOutputPartitioning``, false by default in
+  Spark 4.1): otherwise a persisted frame keeps all
+  ``spark.sql.shuffle.partitions`` partitions, and every write from it
+  emits that many files however small the data.
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

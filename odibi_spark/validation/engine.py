@@ -8,12 +8,18 @@ Test types: not_null, unique, accepted_values, range, regex_match,
 row_count, custom_sql, freshness. Each has a ``threshold`` (allowed
 failure FRACTION, 0.0 default) and optional ``quarantine: true``.
 
-Scale design: all row-level tests are evaluated in ONE aggregate pass
-— each test contributes a fail-indicator column, a single
-``agg(sum(indicator)...)`` computes every failure count without
-re-scanning per test (the reference loops tests -> N scans). Unique
-needs its own grouped pass. Quarantine reuses the same indicator
-expressions as a row filter — second scan, not N.
+Scale design: the row count and every row-level test are evaluated
+in ONE aggregate pass — each test contributes a fail-indicator column,
+and a single ``agg(count(1), sum(indicator)...)`` computes the total
+and every failure count without re-scanning per test (the reference
+counts, then loops tests -> N+1 scans). Unique needs its own grouped
+pass. ``valid_rows`` and ``quarantined_rows`` are lazy filters with the
+same indicator expressions.
+
+This module persists nothing. Inside a pipeline, ``NodeExecutor``
+materializes the validation input first (once per node lineage: a fact
+node's graded frame already is), so the aggregate, the quarantine
+write, the main write and downstream nodes all read the same blocks.
 """
 
 from __future__ import annotations
@@ -88,23 +94,19 @@ def run_validation(
     Test dicts: {"name", "type", "column"?, "threshold"?, "quarantine"?,
     plus type-specific params}.
     """
-    total = df.count()
     results: list[TestResult] = []
-    row_tests: list[tuple[dict, Column]] = []
+    row_tests: list[tuple[dict, Column]] = [
+        (test, cond) for test in tests
+        if (cond := _fail_condition(df, test)) is not None
+    ]
+    row = df.agg(
+        F.count(F.lit(1)),
+        *[F.sum(F.when(cond, 1).otherwise(0)) for _, cond in row_tests],
+    ).collect()[0]
+    total = int(row[0])
 
-    agg_exprs = []
-    for test in tests:
-        cond = _fail_condition(df, test)
-        if cond is not None:
-            row_tests.append((test, cond))
-            agg_exprs.append(
-                F.sum(F.when(cond, 1).otherwise(0)).alias(test["name"])
-            )
-
-    counts = df.agg(*agg_exprs).collect()[0].asDict() if agg_exprs else {}
-
-    for test, _ in row_tests:
-        failed = int(counts.get(test["name"]) or 0)
+    for i, (test, _) in enumerate(row_tests, start=1):
+        failed = int(row[i] or 0)
         thr = float(test.get("threshold", 0.0))
         results.append(
             TestResult(

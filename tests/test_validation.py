@@ -63,6 +63,44 @@ def test_threshold_allows_fraction(dirty):
     assert out.results[0].passed  # 1/5 = 0.2 <= 0.5
 
 
+def test_row_tests_and_count_share_one_aggregate(spark, tmp_path):
+    """The row count and every row-level test fold into ONE aggregate:
+    three row tests cost no more jobs than a bare ``df.agg`` on the
+    same frame (a separate ``count()`` would add a job)."""
+    from pyspark.sql import functions as F
+
+    src = str(tmp_path / "v_src")
+    spark.range(200).selectExpr(
+        "id", "id % 7 AS tier", "id % 90 AS age"
+    ).write.parquet(src)
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, "validation pass")
+        try:
+            action(spark.read.parquet(src))
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup("", "")
+
+    tests = [
+        {"name": "id_not_null", "type": "not_null", "column": "id"},
+        {"name": "tier_vals", "type": "accepted_values", "column": "tier",
+         "values": [0, 1, 2, 3]},
+        {"name": "adult", "type": "range", "column": "age", "min": 18},
+    ]
+    bare = jobs("agg_bare", lambda df: df.agg(F.count(F.lit(1))).collect())
+    three = jobs("agg_three_tests", lambda df: run_validation(df, tests))
+    assert three <= bare, f"3 row tests cost {three} jobs vs {bare} for one agg"
+
+    out = run_validation(spark.read.parquet(src), tests)
+    by = {r.name: r for r in out.results}
+    assert all(r.total_rows == 200 for r in out.results)
+    assert by["id_not_null"].failed_rows == 0
+    assert by["tier_vals"].failed_rows == sum(1 for i in range(200) if i % 7 > 3)
+    assert by["adult"].failed_rows == sum(1 for i in range(200) if i % 90 < 18)
+
+
 def test_gate_pass_rate(dirty):
     out = run_validation(dirty, TESTS)
     with pytest.raises(GateFailure):
