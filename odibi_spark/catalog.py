@@ -451,7 +451,7 @@ class Catalog:
         return f"{self.root}/meta_{name}"
 
     def _exists(self, name: str) -> bool:
-        from odibi_spark.io.compact import _fs_for
+        from odibi_spark.io.batch_log import _fs_for
 
         fs, jpath, _ = _fs_for(self.spark, self._table_path(name))
         return fs.exists(jpath)

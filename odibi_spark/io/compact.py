@@ -36,15 +36,12 @@ directory instead.
 
 from __future__ import annotations
 
+import json
 import math
 
 from pyspark.sql import SparkSession
 
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
+from odibi_spark.io.batch_log import _fs_for, read_text, write_atomic
 
 
 def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
@@ -95,26 +92,13 @@ def _manifest_jpath(jvm, path: str):
 
 
 def _write_manifest(spark: SparkSession, path: str, old_files: list[str]) -> None:
-    """Write the pending-delete manifest ATOMICALLY: create under a
-    temp name, then rename into place (atomic on HDFS/posix; ADVICE
-    r6). A crash mid-write leaves only the temp file, never a
-    truncated manifest that would hard-block every later compaction
-    with a JSONDecodeError."""
-    import json
-
-    fs, _, jvm = _fs_for(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    tmp = hpath(path, MANIFEST_NAME + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(old_files).encode("utf-8")))
-    finally:
-        out.close()
-    final = _manifest_jpath(jvm, path)
-    if fs.exists(final):  # rename-onto fails on some FS; manifest is
-        fs.delete(final, False)  # only ever rewritten by a retry
-    if not fs.rename(tmp, final):
-        raise RuntimeError(f"manifest rename {tmp} -> {final} failed")
+    """Write the pending-delete manifest ATOMICALLY (temp + rename,
+    ADVICE r6): a crash mid-write never leaves a truncated manifest
+    that would hard-block every later compaction with a
+    JSONDecodeError."""
+    write_atomic(
+        spark, f"{path.rstrip('/')}/{MANIFEST_NAME}", json.dumps(old_files)
+    )
 
 
 def resume_pending_deletes(spark: SparkSession, path: str) -> int:
@@ -123,23 +107,14 @@ def resume_pending_deletes(spark: SparkSession, path: str) -> int:
     still present, then remove the manifest. Returns the number of
     files deleted (0 when there is nothing to recover). Called
     automatically at the start of ``compact_small_files``."""
-    import json
-
     fs, _, jvm = _fs_for(spark, path)
     mp = _manifest_jpath(jvm, path)
     if not fs.exists(mp):
         return 0
-    stream = fs.open(mp)
-    try:
-        raw = bytes(
-            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
     hpath = jvm.org.apache.hadoop.fs.Path
     deleted = 0
     try:
-        pending = json.loads(raw.decode("utf-8"))
+        pending = json.loads(read_text(spark, mp.toString()))
     except ValueError:
         # Unparseable manifest (pre-atomic-write truncation): the
         # delete loop never ran, so the worst case is re-runnable

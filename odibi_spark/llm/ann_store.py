@@ -11,20 +11,21 @@ partitions. This module provides that lifecycle for the IVF-PQ index
 (:func:`odibi_spark.llm.similarity.ivf_pq_topk` — the composition the
 reference-scale path recommends):
 
-- ``{path}/codes`` — (nbr_id, cell, pq_codes) parquet partitioned by
-  (batch_id, cell): replaying a crashed batch dynamically overwrites
-  its own partitions (the SignatureStore exactly-once idiom), and a
-  probe reads only the cell directories its queries route to (static
-  partition pruning).
-- ``{path}/_index_meta.json`` — pins the FULL index identity:
-  geometry (nlist/m/k/dim/iters) AND the trained parameters
-  (coarse centroids + PQ codebooks, a few KB of floats). An append or
-  probe whose constructor geometry disagrees raises — codes encoded
-  under different codebooks are not comparable, and silently mixing
-  them would corrupt every subsequent ADC ranking. Storing the
-  trained parameters in the meta (not retraining) is what makes
-  append/probe DETERMINISTIC across runs and batch splits: encoding
-  is a pure function of (vector, codebooks).
+- ``build`` commits entry 0 of the store's commit log
+  (:mod:`odibi_spark.io.batch_log`, shared with the MinHash
+  ``SignatureStore`` and the CMS fold). It pins the FULL index
+  identity: geometry (nlist/m/k/dim/iters/residual) AND the trained
+  parameters (coarse centroids + PQ codebooks, a few KB of floats).
+  An append or probe whose constructor geometry disagrees raises —
+  codes under different codebooks are not comparable. Pinning the
+  trained parameters is what makes append/probe DETERMINISTIC across
+  runs and batch splits: encoding is a pure function of (vector,
+  codebooks).
+- each ``append`` writes (nbr_id, cell, pq_codes) parquet partitioned
+  by cell into a fresh directory and commits one entry naming it: a
+  crashed append stays invisible, a replayed batch supersedes its
+  earlier entry, and a probe reads only the cell directories its
+  queries route to (static partition pruning).
 
 Scale: train touches only the build batch (2m+1 bounded jobs); append
 shuffles only the delta (m bytes + cell per new vector); probe reads
@@ -38,11 +39,9 @@ component following its incremental MinHash store design
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from odibi_spark.io.batch_log import BatchLog, read_union
 from odibi_spark.llm import similarity
 
 
@@ -72,7 +71,7 @@ class AnnIndexStore:
         self.dim = int(dim)
         self.iters = int(iters)
         # Lloyd steps for the PQ codebooks at build time. NOT index
-        # identity: the trained codebooks land in the meta, so a
+        # identity: the trained codebooks land in entry 0, so a
         # probe/append process never needs to know how many steps
         # produced them (the same exemption as nprobe).
         self.pq_iters = int(pq_iters)
@@ -81,13 +80,12 @@ class AnnIndexStore:
         self.residual = bool(residual)
         self.centroids: list[list[float]] | None = None
         self.codebooks: list[list[list[float]]] | None = None
-        self._codes = os.path.join(path, "codes")
-        self._meta = os.path.join(path, "_index_meta.json")
+        self._log = BatchLog(spark, path, legacy="_index_meta.json")
 
     # -- identity ----------------------------------------------------------
 
     def exists(self) -> bool:
-        return os.path.exists(self._meta)
+        return bool(self._log.entries())
 
     def _geometry(self) -> dict:
         return {
@@ -97,16 +95,14 @@ class AnnIndexStore:
             "residual": self.residual,
         }
 
-    def _load_meta(self) -> dict:
-        with open(self._meta) as fh:
-            return json.load(fh)
-
     def check_config(self) -> None:
         """Load the pinned geometry + trained parameters; raise when
         this process's constructor geometry disagrees (the
         SignatureStore drift-refusal contract — ``nprobe`` is a QUERY
         parameter, not index identity, so it is exempt)."""
-        meta = self._load_meta()
+        meta = self._log.snapshot()[0]
+        if meta is None:
+            raise FileNotFoundError(f"no ann index built at {self.path}")
         want = self._geometry()
         stored = {kk: meta.get(kk) for kk in want}
         mismatch = {
@@ -161,12 +157,17 @@ class AnnIndexStore:
     ) -> None:
         """Train coarse centroids + PQ codebooks on ``df`` (the
         training batch — typically the first ingestion slice) and pin
-        them in the meta (atomic temp+rename, BEFORE any codes land —
-        the SignatureStore crash-ordering lesson). Ingestion is
-        separate: feed batches through :meth:`append` /
-        :func:`run_incremental_ann`, which encode under THIS pinned
-        geometry — training never reruns, so batch-split execution is
-        bit-identical to a one-shot pass."""
+        them by committing log entry 0. A crash before that commit
+        leaves no index, so the build simply reruns; an index that is
+        already built raises. Ingestion is separate: feed batches
+        through :meth:`append` / :func:`run_incremental_ann`, which
+        encode under THIS pinned geometry — training never reruns, so
+        batch-split execution is bit-identical to a one-shot pass."""
+        if self.exists():
+            raise ValueError(
+                f"ann index {self.path} is already built — build into a "
+                "fresh path"
+            )
         self.centroids = similarity.ivf_centroids(
             df, id_col, vec_col, nlist=self.nlist, iters=self.iters
         )
@@ -186,16 +187,11 @@ class AnnIndexStore:
                 df, id_col, vec_col, m=self.m, k=self.k, dim=self.dim,
                 iters=self.pq_iters,
             )
-        os.makedirs(self.path, exist_ok=True)
-        meta = {
+        self._log.commit(None, None, {
             **self._geometry(),
             "centroids": self.centroids,
             "codebooks": self.codebooks,
-        }
-        tmp = self._meta + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, self._meta)
+        })
 
     def append(
         self,
@@ -207,32 +203,32 @@ class AnnIndexStore:
     ) -> None:
         """Encode ``df`` (the DELTA — callers pair this with an HWM
         filter, see :func:`run_incremental_ann`) under the pinned
-        geometry and append. Dynamic partition overwrite on
-        (batch_id, cell): replaying a crashed batch replaces exactly
-        its own directories, never double-counting."""
+        geometry into a fresh directory, then commit one log entry
+        naming it: replaying a crashed batch supersedes exactly its own
+        codes, never double-counting."""
         if self.codebooks is None:
             self.check_config()
+        name = self._log.new_dir(batch_id)
+        root = self._log.data_path(name)
+        # repartition ON cell first: partitionBy from N tasks otherwise
+        # writes N x nlist tiny files per append
         enc = self._encode(df, id_col, vec_col)
-        (
-            # repartition ON cell first: partitionBy from N tasks
-            # otherwise writes N x nlist tiny files per append
-            enc.repartition("cell")
-            .withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "cell")
-            .parquet(self._codes)
-        )
+        enc.repartition("cell").write.partitionBy("cell").parquet(root)
+        cells = self._log.partitions(root, "cell")
+        if cells:  # an empty delta commits nothing
+            self._log.commit(str(batch_id), name, parts=cells)
 
     def read_codes(
         self, cells: list[int] | None = None
     ) -> DataFrame | None:
         """Stored (nbr_id, cell, pq_codes); ``cells`` narrows the
-        read to those partition directories (static partition
-        pruning — probes pass their routed cell set)."""
-        if not os.path.exists(self._codes):
+        read to appends holding those cells and, within each, to those
+        partition directories (static partition pruning — probes pass
+        their routed cell set)."""
+        dirs = self._log.live_paths(cells)
+        if not dirs:
             return None
-        df = self.spark.read.parquet(self._codes)
+        df = read_union(self.spark, dirs)
         if cells is not None:
             df = df.filter(F.col("cell").isin([int(c) for c in cells]))
         return df.select("nbr_id", "cell", "pq_codes")
@@ -286,7 +282,7 @@ class AnnIndexStore:
         })
         codes = self.read_codes(cells=cells)
         if codes is None:
-            raise FileNotFoundError(f"no codes stored at {self._codes}")
+            raise FileNotFoundError(f"no codes stored at {self.path}")
         if self.residual:
             probes = probes.withColumn(
                 "q_vec",
@@ -322,9 +318,10 @@ def run_incremental_ann(
     (``id_col`` > committed mark), encode + append ONLY the delta,
     commit the new mark AFTER the append lands (the
     :func:`run_incremental_dedup` shape — crash between append and
-    commit replays the batch, and the dynamic partition overwrite
-    makes the replay idempotent). Returns the number of delta rows
-    appended; first run with no committed mark ingests everything.
+    commit replays the batch, and the replay's log entry supersedes
+    the first one, so the replay is idempotent). Returns the number of
+    delta rows appended; first run with no committed mark ingests
+    everything.
     The store must already be built (geometry trained + pinned)."""
     from odibi_spark.state.hwm import incremental_filter
 

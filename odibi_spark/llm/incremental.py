@@ -24,10 +24,13 @@ next to the corpus) and, per batch, only:
    two-batch replay provably equal to a one-shot pass (the declared
    ``dedup_incremental_docs`` workload hash-checks exactly that
    against a one-shot DuckDB oracle);
-5. appends the delta's signatures to the store partitioned by
-   batch id with dynamic partition overwrite, so a crashed-and-
-   replayed batch overwrites its own partition instead of duplicating
-   signatures (exactly-once store maintenance, at-least-once safe);
+5. appends the delta's signatures and band keys through the store's
+   commit log (:mod:`odibi_spark.io.batch_log`): both tables land in
+   a fresh attempt directory and become visible only when the batch's
+   log entry is renamed into ``_log/``. Readers see committed batches
+   only, and a replayed batch's entry supersedes its earlier one, so
+   a crash at any write boundary never double-counts signatures
+   (exactly-once store maintenance, at-least-once safe);
 6. commits the new HWM only AFTER the store append succeeds
    (reference pipeline.py:1537-1543 commit discipline).
 
@@ -39,11 +42,9 @@ what makes replay order-insensitive.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from odibi_spark.io.batch_log import BatchLog, read_union
 from odibi_spark.llm import dedup
 from odibi_spark.state.hwm import StateBackend, capture_hwm, incremental_filter
 
@@ -68,8 +69,8 @@ def _with_bucket(banded: DataFrame, n_buckets: int) -> DataFrame:
 #: under-sized buckets for wide band keys (the portable hasher's bh
 #: is rows_per_band rendered decimals, ~3x an xxhash64 key — VERDICT
 #: r15 #8). Clamped to [8, 4096]; the resolved modulus AND the sizing
-#: inputs are pinned in ``_store_meta.json`` like every other layout
-#: property, so probes and later appends adopt them.
+#: inputs are pinned by log entry 0 like every other layout property,
+#: so probes and later appends adopt them.
 BUCKET_TARGET_BYTES = 20_000_000
 
 
@@ -94,24 +95,26 @@ def _adaptive_buckets(band_rows: int, row_bytes: int = 20) -> int:
 
 
 class SignatureStore:
-    """Append-only MinHash signature store on parquet (a Delta table
-    with the same layout on a real cluster). Two sub-tables:
+    """Append-only MinHash signature store on parquet, committed
+    through a :class:`~odibi_spark.io.batch_log.BatchLog`. Each batch
+    lands in one attempt directory ``{path}/data/{batch}.{attempt}``
+    holding two tables:
 
-    - ``{path}/sigs``  — (id, h0..h{num_perm-1}) partitioned by
-      ingestion batch: replaying a batch dynamically overwrites its
-      own partition, so the store never double-counts a crashed run;
-    - ``{path}/bands`` — (id, band, bh) partitioned by
-      (batch_id, bucket) where bucket = xxhash64(bh) mod n_buckets.
-      Band keys are computed ONCE at append time (VERDICT r5 task 6):
-      the per-batch probe filters on the delta's own bucket values, so
-      partition pruning reads only matching bucket directories and the
-      store is never re-hashed or scanned wholesale.
+    - ``sigs``  — (id, h0..h{num_perm-1});
+    - ``bands`` — (id, band, bh) partitioned by bucket = xxhash64(bh)
+      mod n_buckets. Band keys are computed ONCE at append time
+      (VERDICT r5 task 6): the per-batch probe filters on the delta's
+      own bucket values, so partition pruning reads only matching
+      bucket directories and the store is never re-hashed or scanned
+      wholesale.
 
-    ``_store_meta.json`` pins the band geometry (bands/rows_per_band/
-    hasher/n_buckets); a probe or append with different parameters
-    raises instead of silently joining incompatible band keys.
-    (Layout v2 — the r5 single-table layout has no migration path;
-    rebuild the store by replaying batches.)
+    The batch's log entry names the directory and its bucket set; a
+    replayed batch commits a new entry that supersedes the old one.
+    Entry 0 pins the band geometry (bands/rows_per_band/hasher/
+    n_buckets); a probe or append with different parameters raises
+    instead of silently joining incompatible band keys. (Layout v3 —
+    the ``_store_meta.json`` layouts have no migration path; rebuild
+    the store by replaying batches.)
     """
 
     def __init__(
@@ -130,18 +133,16 @@ class SignatureStore:
         self.rows_per_band = int(rows_per_band)
         self.hasher = hasher
         # None = adaptive: resolved at first append from the batch's
-        # signature count (see _adaptive_buckets), then pinned in the
-        # meta; an int pins the layout explicitly as before
+        # signature count (see _adaptive_buckets), then pinned by log
+        # entry 0; an int pins the layout explicitly
         self.n_buckets = None if n_buckets is None else int(n_buckets)
-        self._sigs = os.path.join(path, "sigs")
-        self._bands = os.path.join(path, "bands")
-        self._meta = os.path.join(path, "_store_meta.json")
+        self._log = BatchLog(spark, path, legacy="_store_meta.json")
         # estimated band-row width backing an adaptive n_buckets
-        # resolution (recorded in the meta for auditability)
+        # resolution (recorded in entry 0 for auditability)
         self._row_bytes: int | None = None
 
     def exists(self) -> bool:
-        return os.path.exists(self._sigs)
+        return bool(self._log.entries())
 
     def _config(self) -> dict:
         cfg = {
@@ -150,7 +151,7 @@ class SignatureStore:
         }
         if self._row_bytes is not None:
             # sizing inputs behind an ADAPTIVE modulus (audit trail;
-            # not identity — check_config ignores them)
+            # not identity — _pin ignores them)
             cfg["band_row_bytes"] = self._row_bytes
             cfg["bucket_target_bytes"] = BUCKET_TARGET_BYTES
         return cfg
@@ -167,26 +168,13 @@ class SignatureStore:
         )
         return self._row_bytes
 
-    def check_config(
-        self, *, bands: int, rows_per_band: int, hasher: str
-    ) -> None:
-        """Raise when probe parameters disagree with the persisted band
-        geometry — mismatched bands would silently produce join keys
-        that never match the stored ones."""
-        want = {"bands": int(bands), "rows_per_band": int(rows_per_band),
-                "hasher": hasher}
-        if not os.path.exists(self._meta):
-            # meta not yet durable (crash before the first append's
-            # meta write): nothing to verify against — adopt the probe
-            # geometry rather than false-raising on constructor
-            # defaults during replay
-            self.bands, self.rows_per_band = want["bands"], want["rows_per_band"]
-            self.hasher = hasher
+    def _pin(self, identity: dict | None) -> None:
+        if identity is None:
             return
-        with open(self._meta) as fh:
-            have = json.load(fh)
         mismatch = {
-            k: (v, have.get(k)) for k, v in want.items() if have.get(k) != v
+            k: (getattr(self, k), identity[k])
+            for k in ("bands", "rows_per_band", "hasher")
+            if getattr(self, k) != identity[k]
         }
         if mismatch:
             raise ValueError(
@@ -194,171 +182,86 @@ class SignatureStore:
                 f"band geometry: {mismatch} (want, stored)"
             )
         # n_buckets is a store-layout property, not a probe argument:
-        # ADOPT the persisted value — probing with a different modulus
+        # ADOPT the pinned value — probing with a different modulus
         # would prune to the wrong partitions and silently miss dups
-        if "n_buckets" in have:
-            self.n_buckets = int(have["n_buckets"])
+        self.n_buckets = int(identity["n_buckets"])
+
+    def check_config(
+        self, *, bands: int, rows_per_band: int, hasher: str
+    ) -> None:
+        """Take the probe's band geometry; raise when it disagrees with
+        the geometry entry 0 pinned — mismatched bands would silently
+        produce join keys that never match the stored ones."""
+        self.bands, self.rows_per_band = int(bands), int(rows_per_band)
+        self.hasher = hasher
+        self._pin(self._log.snapshot()[0])
 
     def read(self) -> DataFrame | None:
-        if not self.exists():
-            return None
-        return self.spark.read.parquet(self._sigs).drop("batch_id")
+        dirs = [f"{d}/sigs" for d in self._log.live_paths()]
+        return self.spark.read.parquet(*dirs) if dirs else None
 
     def read_bands(self, buckets: list[int] | None = None) -> DataFrame | None:
         """Banded store rows (id, band, bh); ``buckets`` narrows the
-        read to those partition directories (static partition
-        pruning — the probe passes the delta's own bucket set).
-
-        Bands without a meta file are UNTRUSTED (ADVICE r6): their
-        bucket modulus / band geometry may differ from this process's
-        constructor values (pre-fix stores wrote meta after bands), so
-        pruning could read the wrong partitions and silently miss
-        dups. Returning None routes the probe to the recompute-from-
-        signatures fallback, which assumes nothing about stored keys.
-        """
-        if not os.path.exists(self._bands) or not os.path.exists(self._meta):
+        read to batches holding those buckets and, within each, to
+        those partition directories (static partition pruning — the
+        probe passes the delta's own bucket set)."""
+        dirs = [f"{d}/bands" for d in self._log.live_paths(buckets)]
+        if not dirs:
             return None
-        df = self.spark.read.parquet(self._bands)
+        df = read_union(self.spark, dirs)
         if buckets is not None:
             df = df.filter(F.col("bucket").isin([int(b) for b in buckets]))
         return df.select("id", "band", "bh")
 
-    def _write_meta(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._meta + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self._config(), fh)
-        os.replace(tmp, self._meta)
-
-    def _write_sigs(self, signatures: DataFrame, batch_id: str) -> None:
-        (
-            signatures.withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self._sigs)
-        )
-
-    def _write_bands(self, signatures: DataFrame, batch_id: str) -> None:
+    def _write_bands(self, signatures: DataFrame, path: str) -> None:
         banded = _with_bucket(
             dedup.band_keys(
                 signatures, self.bands, self.rows_per_band, self.hasher
             ),
             self.n_buckets,
         )
-        (
-            # repartition ON the partition column first: partitionBy
-            # from N tasks otherwise writes up to N x n_buckets tiny
-            # files per append (measured ~2k at sf0.1); after the
-            # shuffle each task owns whole buckets -> one file per
-            # (batch, bucket) directory
-            banded.repartition("bucket")
-            .withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "bucket")
-            .parquet(self._bands)
-        )
+        # repartition ON the partition column first: partitionBy from N
+        # tasks otherwise writes up to N x n_buckets tiny files per
+        # append (measured ~2k at sf0.1); after the shuffle each task
+        # owns whole buckets -> one file per bucket directory
+        banded.repartition("bucket").write.partitionBy("bucket").parquet(path)
 
     def append(self, signatures: DataFrame, batch_id: str) -> None:
-        """Append one batch. Ordering invariant (ADVICE r6): persisted
-        BANDS never exist without a meta pinning their geometry —
-        read_bands refuses meta-less bands, and every sigs-without-
-        bands / meta-without-data crash window replays into either the
-        recompute fallback or a clean re-stamp (below). r16: the meta
-        is resolved and written FIRST (its adaptive bucket count now
-        comes from a count of the caller's — typically checkpointed —
-        signature frame, not a re-read of freshly written parquet),
-        and the sigs and bands tables are then written as two
-        CONCURRENT jobs (guide §2.6 — independent writes of the same
-        materialized frame; the scheduler back-fills the tail of one
-        write with the other's tasks). Job count per append: 3 -> 2,
-        wall ~= max(sigs, bands) instead of sigs + count + bands."""
-        meta_missing = not os.path.exists(self._meta)
-        had_prior_sigs = os.path.exists(self._sigs)
-        if meta_missing and os.path.exists(self._bands):
-            # pre-fix store crashed between bands and meta: those
-            # bands' geometry is unknowable — stamping THIS
-            # process's meta would retroactively bless them and
-            # reintroduce the mixed-geometry pruning bug (review
-            # r7). Bands are a derived index over sigs, so rebuild
-            # the WHOLE index from the signature table with this
-            # process's geometry (dropping alone would orphan
-            # earlier batches from every future pruned probe).
-            import shutil
+        """Append one batch: write its sigs and bands, then commit one
+        log entry naming them. A crash before the commit leaves an
+        invisible attempt directory that the next commit deletes; a
+        replayed batch supersedes its earlier entry as a whole.
 
-            shutil.rmtree(self._bands)
-        if meta_missing and had_prior_sigs:
-            # crash-replay rebuild (rare): sigs exist with no meta —
-            # keep the r15 serial path: write this batch's sigs,
-            # resolve the layout from the WHOLE store, stamp the meta,
-            # re-band every earlier batch, then band this batch.
-            self._write_sigs(signatures, batch_id)
+        The two tables are written as CONCURRENT jobs (guide §2.6 —
+        independent writes of the same materialized frame; the
+        scheduler back-fills the tail of one write with the other's
+        tasks), so the wall is ~max(sigs, bands). The first append of
+        an adaptive store adds one count of the caller's (typically
+        checkpointed) signature frame to resolve ``n_buckets``."""
+        identity = self._log.snapshot()[0]
+        if identity is None:
             if self.n_buckets is None:
-                n_sigs = self.spark.read.parquet(self._sigs).count()
-                self.n_buckets = _adaptive_buckets(
-                    n_sigs * self.bands, self._est_row_bytes(signatures)
-                )
-            self._write_meta()
-            stored_other = self.spark.read.parquet(self._sigs).filter(
-                F.col("batch_id") != str(batch_id)
-            )
-            if stored_other.limit(1).count():
-                rebanded = _with_bucket(
-                    dedup.band_keys(
-                        stored_other.drop("batch_id"), self.bands,
-                        self.rows_per_band, self.hasher,
-                    ),
-                    self.n_buckets,
-                ).join(stored_other.select("id", "batch_id"), "id")
-                (
-                    rebanded.repartition("bucket")
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id", "bucket")
-                    .parquet(self._bands)
-                )
-            self._write_bands(signatures, batch_id)
-            return
-        if meta_missing or not had_prior_sigs:
-            # fresh store — or the meta-without-data crash window the
-            # meta-first ordering introduces (meta landed, neither
-            # table did): no persisted rows exist under the old stamp,
-            # so re-stamp with THIS process's geometry rather than
-            # adopting a possibly different crashed one.
-            if self.n_buckets is None:
-                # adaptive layout: at first append the store's
-                # signature count IS this batch's count — and the
-                # caller's frame is typically an eager localCheckpoint,
-                # so this count is a cache read, not a parquet re-scan
                 self.n_buckets = _adaptive_buckets(
                     signatures.count() * self.bands,
                     self._est_row_bytes(signatures),
                 )
-            self._write_meta()
-        elif self.n_buckets is None:
-            # meta durable but this process never read it (direct
-            # append without a prior check_config): adopt the
-            # persisted layout instead of crashing on an unresolved
-            # adaptive modulus
-            with open(self._meta) as fh:
-                persisted = json.load(fh)
-            if persisted.get("n_buckets") is not None:
-                self.n_buckets = int(persisted["n_buckets"])
-            else:
-                self.n_buckets = _adaptive_buckets(
-                    signatures.count() * self.bands,
-                    self._est_row_bytes(signatures),
-                )
-                self._write_meta()
-        # two independent writes of the same (materialized) frame:
-        # submit concurrently so the wall cost is max, not sum
+            identity = self._config()
+        self._pin(identity)
+        name = self._log.new_dir(batch_id)
+        root = self._log.data_path(name)
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fs = pool.submit(self._write_sigs, signatures, batch_id)
-            fb = pool.submit(self._write_bands, signatures, batch_id)
-            fs.result()
-            fb.result()
+            jobs = [
+                pool.submit(signatures.write.parquet, f"{root}/sigs"),
+                pool.submit(self._write_bands, signatures, f"{root}/bands"),
+            ]
+        # read both futures before raising the first failure
+        for err in filter(None, [job.exception() for job in jobs]):
+            raise err
+        buckets = self._log.partitions(f"{root}/bands", "bucket")
+        if buckets:  # an empty batch (a rerun past the HWM) commits nothing
+            self._log.commit(batch_id, name, identity, parts=buckets)
 
 
 def flag_incremental_dups(
@@ -397,46 +300,23 @@ def flag_incremental_dups(
         hasher=hasher, seed=seed,
     ).localCheckpoint(eager=True)
 
+    store.check_config(
+        bands=bands, rows_per_band=rows_per_band, hasher=hasher
+    )
     stored = store.read()
     banded_new = dedup.band_keys(sigs_new, bands, rows_per_band, hasher)
-    if stored is None:
-        # fresh store: adopt THIS probe's band geometry so the caller's
-        # subsequent store.append persists matching band keys (the
-        # store's constructor defaults may differ from the probe args)
-        store.bands, store.rows_per_band = int(bands), int(rows_per_band)
-        store.hasher = hasher
-        all_sigs = sigs_new
-        banded_all = banded_new
-    else:
-        store.check_config(
-            bands=bands, rows_per_band=rows_per_band, hasher=hasher
-        )
+    all_sigs, banded_all = sigs_new, banded_new
+    if stored is not None:
         all_sigs = stored.unionByName(sigs_new)
-        # O(n_buckets) collect: which store partitions can the delta
-        # hit? (An adaptive-layout store whose meta never landed —
-        # crash before first meta write — has no resolved modulus;
-        # read_bands refuses meta-less bands anyway, so skip the
-        # pruning collect and go straight to the recompute fallback.)
-        probe_buckets = None
-        if store.n_buckets is not None:
-            probe_buckets = [
-                r["bucket"]
-                for r in _with_bucket(banded_new, store.n_buckets)
-                .select("bucket").distinct().collect()
-            ]
-        banded_store = (
-            store.read_bands(probe_buckets)
-            if probe_buckets is not None
-            else None
-        )
-        if banded_store is None:
-            # crash window: sigs written, bands not yet — recompute the
-            # band keys from the signature table for THIS probe (the
-            # replayed append then persists them)
-            banded_store = dedup.band_keys(
-                stored, bands, rows_per_band, hasher
-            )
-        banded_all = banded_store.unionByName(banded_new)
+        # O(n_buckets) collect: which store partitions can the delta hit?
+        probe_buckets = [
+            r["bucket"]
+            for r in _with_bucket(banded_new, store.n_buckets)
+            .select("bucket").distinct().collect()
+        ]
+        banded_store = store.read_bands(probe_buckets)
+        if banded_store is not None:
+            banded_all = banded_store.unionByName(banded_new)
 
     # candidate (a=earlier, b=new) pairs; the new side is the probe
     cands = (
@@ -492,10 +372,10 @@ def run_incremental_dedup(
     caller's downstream write sees a stable result without this
     function materializing the delta's document bodies.
 
-    Crash between store append and HWM commit replays the batch:
-    the dynamic partition overwrite makes the append idempotent and
-    the flags are recomputed identically, so at-least-once execution
-    converges to the exactly-once result.
+    Crash between store append and HWM commit replays the batch: the
+    replayed append's log entry supersedes the first one and the flags
+    are recomputed identically, so at-least-once execution converges
+    to the exactly-once result.
     """
     delta = incremental_filter(
         source, column=id_col, state=state, state_key=state_key,
@@ -569,10 +449,11 @@ def incremental_dedup_batch(
        replay of an epoch whose commit landed is skipped outright;
     2. HWM filter -> flag against store + self (identical logic to the
        batch path);
-    3. flagged rows land in ``output_path`` partitioned by epoch with
-       DYNAMIC partition overwrite — a replayed epoch overwrites its
-       own partition, never duplicates;
-    4. signature append (idempotent: partitioned by batch id);
+    3. flagged rows overwrite the epoch's own partition directory
+       ``{output_path}/epoch={N}`` — a replayed epoch replaces it,
+       never duplicates;
+    4. signature append (idempotent: the replay's log entry supersedes
+       the crashed one);
     5. ONLY THEN the HWM and the epoch pointer commit. A crash in any
        earlier window replays 2-4 byte-identically (the HWM is still
        the old one, so the delta recomputes exactly); a crash between
@@ -601,12 +482,8 @@ def incremental_dedup_batch(
 
         with ThreadPoolExecutor(max_workers=1) as pool:
             hwm_fut = pool.submit(capture_hwm, delta, id_col)
-            (
-                flagged.withColumn("epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(output_path)
+            flagged.write.mode("overwrite").parquet(
+                f"{output_path.rstrip('/')}/epoch={int(epoch_id)}"
             )
             new_hwm = hwm_fut.result()
         store.append(sigs_new, f"epoch={int(epoch_id)}")

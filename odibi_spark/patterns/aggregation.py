@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from odibi_spark.io.batch_log import BatchLog
 from odibi_spark.patterns.merge_target import ParquetTarget
 
 _COMBINE = {
@@ -151,46 +152,18 @@ def aggregate_incremental_sketches(
     return state.select(*grain, *est)
 
 
-def _cms_meta_path(target_path: str) -> str:
-    import os
-
-    return os.path.join(target_path, "_cms_meta.json")
-
-
-def _cms_read_meta(target_path: str) -> dict | None:
-    import json
-
-    try:
-        with open(_cms_meta_path(target_path), encoding="utf-8") as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return None
-
-
-def _cms_write_meta(target_path: str, meta: dict) -> None:
-    import json
-    import os
-
-    path = _cms_meta_path(target_path)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, path)  # atomic pointer commit
-
-
-def _cms_state_dir(target_path: str, version: int) -> str:
-    import os
-
-    return os.path.join(target_path, f"state_v{version}")
+def _cms_log(spark: SparkSession, target_path: str) -> BatchLog:
+    return BatchLog(spark, target_path, legacy="_cms_meta.json")
 
 
 def cms_state_read(spark: SparkSession, target_path: str) -> DataFrame:
-    """Read the current committed CMS state (the version the meta
-    pointer names). Raises if no fold has ever committed."""
-    meta = _cms_read_meta(target_path)
-    if meta is None or meta.get("version") is None:
+    """Read the current committed CMS state (the version the last log
+    entry names). Raises if no fold has ever committed."""
+    log = _cms_log(spark, target_path)
+    live = log.snapshot()[1]
+    if not live:
         raise ValueError(f"no committed CMS state at {target_path}")
-    return spark.read.parquet(_cms_state_dir(target_path, meta["version"]))
+    return spark.read.parquet(log.data_path(live[-1]["data"]))
 
 
 def cms_incremental(
@@ -215,104 +188,58 @@ def cms_incremental(
     (pinned by test), so replay order and partitioning never move the
     estimates.
 
-    (width, depth, seed) must stay constant across batches — they are
-    pinned in ``_cms_meta.json`` (written atomically BEFORE the first
-    state commit, the SignatureStore ordering from ADVICE r7 #2) and a
-    mismatch — or state with no meta, which could have been built
-    under anything — raises rather than silently mixing incompatible
-    hash spaces.
+    The state is committed through the store commit log
+    (:mod:`odibi_spark.io.batch_log`, shared with the MinHash
+    ``SignatureStore`` and the ``AnnIndexStore``). Each fold writes
+    the merged sketch to a fresh ``state_v{N+1}`` directory, then
+    commits a log entry ``{version, last_batch_id}`` naming it; the
+    read uses the last entry, and the commit deletes every state
+    directory the log no longer names. A crash before the commit
+    leaves the last entry on v{N}, so the retry re-reads v{N} — no
+    double count.
 
-    Exactly-once folding (ADVICE r9): each fold writes a NEW versioned
-    state dir (``state_v{N+1}``) and then atomically advances the meta
-    pointer ``{version, last_batch_id}``. A crash between the state
-    write and the pointer commit leaves the pointer on v{N}; the retry
-    re-reads v{N} and rewrites v{N+1} — no double count. From
-    Structured Streaming ``foreachBatch``, pass the epoch id as
-    ``batch_id``: a micro-batch retry AFTER the pointer committed but
-    before the checkpoint did is detected (``batch_id <=
-    last_batch_id``, foreachBatch ids are monotonic) and skipped, so
-    replays are idempotent end to end. A meta pointer naming an
-    unreadable state dir raises (partial state) instead of silently
-    reinitializing over history.
+    (width, depth, seed) must stay constant across batches — entry 0
+    pins them, and a mismatch raises rather than silently mixing
+    incompatible hash spaces. From Structured Streaming
+    ``foreachBatch``, pass the epoch id as ``batch_id``: a micro-batch
+    retry AFTER the entry committed but before the checkpoint did is
+    detected (``batch_id <= last_batch_id``, foreachBatch ids are
+    monotonic) and skipped, so replays are idempotent end to end.
 
-    Layout: ``{target_path}/_cms_meta.json`` + ``{target_path}/
-    state_v{N}`` (parquet). Read the committed state with
-    :func:`cms_state_read`; query it with
-    :func:`odibi_spark.llm.cms.cms_query`.
+    Read the committed state with :func:`cms_state_read`; query it
+    with :func:`odibi_spark.llm.cms.cms_query`.
 
     Returns the merged sketch (depth, bucket, cnt).
     """
-    import os
-    import shutil
-
     from odibi_spark.llm import cms
 
     params = {"width": int(width), "depth": int(depth), "seed": int(seed)}
-    meta = _cms_read_meta(target_path)
-    if meta is None:
-        leftovers = (
-            sorted(
-                d
-                for d in os.listdir(target_path)
-                if d == "state" or d.startswith("state_v")
-            )
-            if os.path.isdir(target_path)
-            else []
+    log = _cms_log(spark, target_path)
+    stored, live = log.snapshot()
+    if stored is not None and stored != params:
+        raise ValueError(
+            f"CMS state at {target_path} was built with {stored}; "
+            f"got {params} — rebuild the state or match the params"
         )
-        if leftovers:
-            raise ValueError(
-                f"CMS state at {target_path} was built with unknown params "
-                f"(no meta); got {params} — rebuild the state or restore "
-                "the meta"
-            )
-        os.makedirs(target_path, exist_ok=True)
-        meta = {**params, "version": None, "last_batch_id": None}
-        _cms_write_meta(target_path, meta)  # params pin before any state
-    else:
-        stored = {k: meta.get(k) for k in ("width", "depth", "seed")}
-        if stored != params:
-            raise ValueError(
-                f"CMS state at {target_path} was built with {stored}; "
-                f"got {params} — rebuild the state or match the params"
-            )
-
-    last = meta.get("last_batch_id")
-    if batch_id is not None and last is not None and int(batch_id) <= int(last):
+    last = live[-1] if live else {"version": -1, "last_batch_id": None}
+    done = last["last_batch_id"]
+    if batch_id is not None and done is not None and int(batch_id) <= done:
         # foreachBatch replay of an already-folded epoch: skip
-        return cms_state_read(spark, target_path)
+        return spark.read.parquet(log.data_path(last["data"]))
 
-    agged = cms.cms_build(
+    state = cms.cms_build(
         batch, key_col,
         width=width, depth=depth, weight_col=weight_col, seed=seed,
     )
-    version = meta.get("version")
-    if version is None:
-        new_version, state = 0, agged
-    else:
-        cur = _cms_state_dir(target_path, version)
-        try:
-            existing = spark.read.parquet(cur)
-            existing.schema
-        except Exception as exc:
-            raise RuntimeError(
-                f"CMS meta at {target_path} names version {version} but "
-                f"{cur} is unreadable — partial state; restore or rebuild "
-                "it rather than letting a fold reinitialize over history"
-            ) from exc
-        new_version = version + 1
-        state = cms.cms_merge(existing, agged)
-    new_dir = _cms_state_dir(target_path, new_version)
-    # mode=overwrite: a retried fold rewrites its own uncommitted dir
-    state.write.mode("overwrite").parquet(new_dir)
-    _cms_write_meta(
-        target_path,
-        {
-            **params,
-            "version": new_version,
-            "last_batch_id": int(batch_id) if batch_id is not None else last,
-        },
+    if live:
+        state = cms.cms_merge(
+            spark.read.parquet(log.data_path(last["data"])), state
+        )
+    version = last["version"] + 1
+    name = log.new_dir(f"state_v{version}")
+    state.write.parquet(log.data_path(name))
+    log.commit(
+        "state", name, params, version=version,
+        last_batch_id=done if batch_id is None else int(batch_id),
     )
-    for d in os.listdir(target_path):  # sweep superseded versions
-        if d.startswith("state_v") and d != f"state_v{new_version}":
-            shutil.rmtree(os.path.join(target_path, d), ignore_errors=True)
-    return spark.read.parquet(new_dir)
+    return spark.read.parquet(log.data_path(name))

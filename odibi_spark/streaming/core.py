@@ -482,13 +482,13 @@ def streaming_incremental_dedup(
     No HWM filter here: the source checkpoint already makes each
     micro-batch a pure delta. Exactly-once: kept docs write to
     ``target_path/batch_id=<epoch>`` (epoch-keyed overwrite) and the
-    epoch's signatures append to the store partitioned by the same
-    epoch with dynamic partition overwrite — a replayed epoch
-    overwrites both its corpus slice and its signature partition, so
-    the replay converges to the same bytes. Within a replay the store
-    may transiently hold the epoch's signatures already; candidate
-    generation is id-inequality-filtered and distinct, so the
-    duplicate signature rows cannot change the flags.
+    epoch's signatures append to the store under the epoch as batch
+    id — a replayed epoch overwrites its corpus slice and its store
+    log entry supersedes the crashed one, so the replay converges to
+    the same bytes. Within a replay the store may transiently hold the
+    epoch's signatures already; candidate generation is
+    id-inequality-filtered and distinct, so the duplicate signature
+    rows cannot change the flags.
 
     State growth is one row of ``num_perm`` longs per document ever
     ingested — the signature store IS the streaming state, readable by

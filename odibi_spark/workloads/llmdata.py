@@ -2600,7 +2600,7 @@ def ann_incremental_probe_embeddings(
     """Persisted ANN index lifecycle (VERDICT r14 task 2), replayed
     over TWO ingestion batches against a ONE-SHOT oracle: the IVF-PQ
     index trains on batch 1 (vec_id <= corpus midpoint), the trained
-    geometry is PINNED in ``_index_meta.json``, batch 2 reaches the
+    geometry is PINNED by the index log's entry 0, batch 2 reaches the
     store through the stateful HWM filter and is encoded delta-only
     under the pinned codebooks, and the final probe reads the stored
     codes (partition-pruned to the probed cells) — never a raw

@@ -2135,10 +2135,12 @@ class TestIncrementalDedup:
 
         df, store, state = self._setup(spark, tmp_path / "prune")
         self._run(df, store, state, "all")
-        # bands table is laid out batch_id=/bucket=
-        bdir = str(tmp_path / "prune" / "sigs" / "bands")
+        # the one committed batch's bands are laid out bucket=
+        data = tmp_path / "prune" / "sigs" / "data"
+        (attempt,) = _os.listdir(data)
         assert any(
-            d.startswith("batch_id=") for d in _os.listdir(bdir)
+            d.startswith("bucket=")
+            for d in _os.listdir(data / attempt / "bands")
         )
         sub = store.read_bands([0, 1])
         plan = sub._jdf.queryExecution().toString()
@@ -2162,107 +2164,10 @@ class TestIncrementalDedup:
             spark, str(tmp_path / "nb2" / "sigs"), n_buckets=7
         )
         got = self._run(df2, store3, state2, "b2")
-        # adopted from _store_meta.json (store2 resolved its modulus
+        # adopted from log entry 0 (store2 resolved its modulus
         # adaptively at first append and pinned it there)
         assert store2.n_buckets is not None
         assert store3.n_buckets == store2.n_buckets != 7
-        for k, v in got.items():
-            assert want[k] == v, (k, v, want[k])
-
-    def test_missing_bands_table_falls_back(self, spark, tmp_path):
-        """Crash window between the sigs write and the bands write:
-        the probe must recompute band keys from the signature table
-        instead of crashing, and flags stay identical."""
-        import shutil
-
-        df, store, state = self._setup(spark, tmp_path / "fb")
-        want = self._run(df.filter("doc_id <= 3"), store, state, "b1")
-        want.update(self._run(df, store, state, "b2"))
-
-        df2, store2, state2 = self._setup(spark, tmp_path / "fb2")
-        self._run(df2.filter("doc_id <= 3"), store2, state2, "b1")
-        shutil.rmtree(str(tmp_path / "fb2" / "sigs" / "bands"))
-        got = self._run(df2, store2, state2, "b2")
-        for k, v in got.items():
-            assert want[k] == v, (k, v, want[k])
-
-    def test_meta_written_before_bands(self, spark, tmp_path):
-        """ADVICE r6: _store_meta.json must be durable before any bands
-        row — so a crash can never leave persisted bands whose geometry
-        a replaying process would have to guess at. (Sigs MAY land
-        before the meta — r15 adaptive layout resolves the bucket
-        modulus from the written signature table — because the
-        sigs-without-meta crash window replays into the recompute
-        fallback.) And bands WITHOUT a meta file (pre-fix stores) are
-        untrusted: read_bands returns None, routing the probe to the
-        recompute fallback."""
-        import os as _os
-
-        from odibi_spark.llm.dedup import minhash_signatures
-
-        df, store, state = self._setup(spark, tmp_path / "mw")
-        sigs = minhash_signatures(
-            df, "doc_id", "text", n=2, num_perm=32, seed=42
-        )
-        orig_write = sigs.write.__class__.parquet
-        store_path = str(tmp_path / "mw" / "sigs")
-
-        # append() writes meta before BANDS: verify by intercepting
-        # every parquet write and asserting meta already exists on
-        # disk whenever a bands path is written
-        seen = []
-
-        def spy(self_, path, **kw):
-            seen.append(
-                (path, _os.path.exists(store_path + "/_store_meta.json"))
-            )
-            return orig_write(self_, path, **kw)
-
-        sigs.write.__class__.parquet = spy
-        try:
-            store.append(sigs, "b1")
-        finally:
-            sigs.write.__class__.parquet = orig_write
-        band_writes = [
-            meta_present for path, meta_present in seen
-            if path.rstrip("/").endswith("bands")
-        ]
-        assert band_writes and all(band_writes)
-
-        # meta deleted (bands present, meta missing): bands untrusted
-        _os.remove(store_path + "/_store_meta.json")
-        assert store.read_bands() is None
-        # and the full probe still flags identically via the fallback
-        got = self._run(df, store, state, "b2")
-        df2, store2, state2 = self._setup(spark, tmp_path / "mw2")
-        want = self._run(df2.filter("doc_id <= 3"), store2, state2, "b1")
-        want.update(self._run(df2, store2, state2, "b2"))
-        for k, v in got.items():
-            assert want[k] == v, (k, v, want[k])
-
-    def test_orphan_bands_rebuilt_not_blessed(self, spark, tmp_path):
-        """Review r7: appending to a store whose bands exist WITHOUT
-        meta (pre-fix crash window) must rebuild the whole band index
-        from the signature table — stamping meta around the unknown
-        bands would bless mixed geometry, and merely dropping them
-        would orphan earlier batches from every pruned probe."""
-        import os as _os
-
-        df, store, state = self._setup(spark, tmp_path / "ob")
-        want = self._run(df.filter("doc_id <= 3"), store, state, "b1")
-        want.update(self._run(df.filter("doc_id = 4"), store, state, "b2"))
-        want.update(self._run(df, store, state, "b3"))
-
-        df2, store2, state2 = self._setup(spark, tmp_path / "ob2")
-        self._run(df2.filter("doc_id <= 3"), store2, state2, "b1")
-        # simulate the pre-fix crash: bands present, meta missing
-        _os.remove(str(tmp_path / "ob2" / "sigs" / "_store_meta.json"))
-        self._run(df2.filter("doc_id = 4"), store2, state2, "b2")
-        # meta restored by the rebuild; the band index must cover b1
-        # again: doc 5 (dup of doc 3, which arrived in b1) is caught
-        # through the PRUNED banded path, proving b1's bands exist
-        assert _os.path.exists(str(tmp_path / "ob2" / "sigs" / "_store_meta.json"))
-        got = self._run(df2, store2, state2, "b3")
         for k, v in got.items():
             assert want[k] == v, (k, v, want[k])
 
@@ -2288,8 +2193,8 @@ class TestIncrementalDedup:
 
     def test_crash_replay_is_idempotent(self, spark, tmp_path):
         """Crash between store append and HWM commit: the batch re-runs
-        in full; dynamic partition overwrite dedups the store, flags
-        recompute identically."""
+        in full; its new log entry supersedes the first, so the store
+        holds one copy and flags recompute identically."""
         df, store, state = self._setup(spark, tmp_path)
         self._run(df.filter("doc_id <= 3"), store, state, "b1")
         first = self._run(df, store, state, "b2")

@@ -487,25 +487,6 @@ class TestCmsIncremental:
                 target_path=path, key_col="tok", width=32, depth=2, seed=4,
             )
 
-    def test_missing_meta_is_untrusted(self, spark, tmp_path):
-        import os
-
-        import pytest
-
-        from odibi_spark.patterns.aggregation import cms_incremental
-
-        path = str(tmp_path / "cms_state")
-        cms_incremental(
-            spark, self._batch(spark, ["a"]),
-            target_path=path, key_col="tok", width=16, depth=2, seed=4,
-        )
-        os.remove(os.path.join(path, "_cms_meta.json"))
-        with pytest.raises(ValueError, match="no meta"):
-            cms_incremental(
-                spark, self._batch(spark, ["b"]),
-                target_path=path, key_col="tok", width=16, depth=2, seed=4,
-            )
-
     def test_batch_id_replay_is_idempotent(self, spark, tmp_path):
         """foreachBatch retry semantics (ADVICE r9): re-folding an
         already-committed batch_id must be a no-op, not a silent
@@ -535,75 +516,6 @@ class TestCmsIncremental:
             self._batch(spark, b1 + b2), "tok", width=16, depth=2, seed=4
         )
         assert sorted(map(tuple, replayed.collect())) == sorted(
-            map(tuple, one_shot.collect())
-        )
-
-    def test_partial_state_raises_not_reinitializes(self, spark, tmp_path):
-        """Meta pointer naming an unreadable state dir = interrupted
-        write; the next fold must raise, never silently restart the
-        history from scratch (ADVICE r9)."""
-        import json
-        import os
-        import shutil
-
-        import pytest
-
-        from odibi_spark.patterns.aggregation import cms_incremental
-
-        path = str(tmp_path / "cms_state")
-        cms_incremental(
-            spark, self._batch(spark, ["a", "b"]),
-            target_path=path, key_col="tok", width=16, depth=2, seed=4,
-        )
-        with open(os.path.join(path, "_cms_meta.json")) as fh:
-            version = json.load(fh)["version"]
-        shutil.rmtree(os.path.join(path, f"state_v{version}"))
-        with pytest.raises(RuntimeError, match="partial state"):
-            cms_incremental(
-                spark, self._batch(spark, ["c"]),
-                target_path=path, key_col="tok", width=16, depth=2, seed=4,
-            )
-
-    def test_crash_between_state_write_and_meta_commit_is_safe(
-        self, spark, tmp_path
-    ):
-        """Versioned-state property: a state dir written WITHOUT the
-        meta pointer advancing (crash window) is simply rewritten by
-        the retry — the committed history never double-counts."""
-        import json
-        import os
-
-        from odibi_spark.llm import cms
-        from odibi_spark.patterns.aggregation import cms_incremental
-
-        path = str(tmp_path / "cms_state")
-        b1, b2 = ["a", "a"], ["b", "b", "b"]
-        cms_incremental(
-            spark, self._batch(spark, b1),
-            target_path=path, key_col="tok", width=16, depth=2, seed=4,
-            batch_id=0,
-        )
-        # simulate the crash: batch 2's state_v1 got written but the
-        # meta pointer still names v0 / batch 0
-        orphan = cms.cms_build(
-            self._batch(spark, b2), "tok", width=16, depth=2, seed=4
-        )
-        orphan.write.mode("overwrite").parquet(
-            os.path.join(path, "state_v1")
-        )
-        with open(os.path.join(path, "_cms_meta.json")) as fh:
-            assert json.load(fh)["version"] == 0
-        # retry of batch 1 folds from the COMMITTED v0, overwriting the
-        # orphan — result equals the clean one-shot
-        out = cms_incremental(
-            spark, self._batch(spark, b2),
-            target_path=path, key_col="tok", width=16, depth=2, seed=4,
-            batch_id=1,
-        )
-        one_shot = cms.cms_build(
-            self._batch(spark, b1 + b2), "tok", width=16, depth=2, seed=4
-        )
-        assert sorted(map(tuple, out.collect())) == sorted(
             map(tuple, one_shot.collect())
         )
 

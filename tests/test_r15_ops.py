@@ -231,7 +231,7 @@ class TestAnnIndexStore:
         df = _vec_df(spark, _unit_vecs(40))
         store = AnnIndexStore(spark, str(tmp_path / "idx"), **self.GEO)
         store.build(df, "vec_id", "embedding")
-        meta = json.load(open(tmp_path / "idx" / "_index_meta.json"))
+        meta = json.load(open(tmp_path / "idx" / "_log" / "0"))["identity"]
         assert len(meta["centroids"]) == 4
         assert len(meta["codebooks"]) == 8
         # a fresh process reloads the SAME trained params — encoding
@@ -437,7 +437,7 @@ class TestAdaptiveBandStoreLayout:
         sigs = minhash_signatures(self._df(spark), "doc_id", n=2)
         store.append(sigs, "b1")
         assert store.n_buckets == 8  # tiny batch -> min clamp
-        meta = _json.load(open(tmp_path / "s" / "_store_meta.json"))
+        meta = _json.load(open(tmp_path / "s" / "_log" / "0"))["identity"]
         assert meta["n_buckets"] == 8
         # a later adaptive store object adopts the pinned value even
         # though its own first batch would resolve differently
@@ -453,7 +453,7 @@ class TestAdaptiveBandStoreLayout:
 
         store = SignatureStore(spark, str(tmp_path / "e"), n_buckets=16)
         store.append(minhash_signatures(self._df(spark), "doc_id", n=2), "b1")
-        meta = _json.load(open(tmp_path / "e" / "_store_meta.json"))
+        meta = _json.load(open(tmp_path / "e" / "_log" / "0"))["identity"]
         assert meta["n_buckets"] == 16
 
     def test_adaptive_clamps(self):

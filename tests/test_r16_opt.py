@@ -1,5 +1,5 @@
-"""Round-16 optimization tests: the meta-first / concurrent-write
-SignatureStore append, the duplicate_span_signals restructure
+"""Round-16 optimization tests: the concurrent-write SignatureStore
+append, the duplicate_span_signals restructure
 (projection totals + duplicated-gram-only join), and the binary
 internal keys (unhex(md5)) in the rewrite operators."""
 
@@ -128,8 +128,9 @@ class TestBinaryInternalKeys:
 
 
 class TestAppendOrderingR16:
-    """Meta-first + concurrent sigs/bands writes: content and crash
-    windows must match the r15 serial layout."""
+    """Concurrent sigs/bands writes committed by one log entry: store
+    content, geometry adoption and adaptive sizing. The crash windows
+    live in test_store_crash.py."""
 
     def _sigs(self, spark, ids=range(1, 9)):
         from odibi_spark.llm.dedup import minhash_signatures
@@ -147,40 +148,18 @@ class TestAppendOrderingR16:
         store = SignatureStore(spark, str(tmp_path / "s"))
         sigs = self._sigs(spark).localCheckpoint(eager=True)
         store.append(sigs, "b1")
-        # meta written before/with data, geometry + resolved buckets
-        meta = json.load(open(tmp_path / "s" / "_store_meta.json"))
+        # entry 0 pins the geometry + resolved buckets
+        meta = json.load(open(tmp_path / "s" / "_log" / "0"))["identity"]
         assert meta["n_buckets"] == store.n_buckets == 8
         got = {r.id for r in store.read().collect()}
         assert got == {r.id for r in sigs.collect()}
         bands = store.read_bands()
         assert bands.count() == sigs.count() * 8
 
-    def test_meta_without_data_window_restamps(self, spark, tmp_path):
-        """Crash after the meta write, before either table: a replay
-        with a DIFFERENT geometry must re-stamp the meta rather than
-        write bands under a stale stamp."""
-        from odibi_spark.llm.incremental import SignatureStore
-
-        crashed = SignatureStore(
-            spark, str(tmp_path / "s"), bands=16, rows_per_band=2,
-            n_buckets=99,
-        )
-        crashed._write_meta()  # meta landed, no data did
-        replay = SignatureStore(
-            spark, str(tmp_path / "s"), bands=8, rows_per_band=4,
-        )
-        sigs = self._sigs(spark).localCheckpoint(eager=True)
-        replay.append(sigs, "b1")
-        meta = json.load(open(tmp_path / "s" / "_store_meta.json"))
-        assert meta["bands"] == 8 and meta["rows_per_band"] == 4
-        assert meta["n_buckets"] == replay.n_buckets == 8
-        assert replay.read_bands().count() == sigs.count() * 8
-
     def test_direct_append_adopts_persisted_buckets(self, spark, tmp_path):
         """Second append from a FRESH store object that never called
-        check_config must adopt the pinned bucket modulus (the
-        meta-first ordering makes this reachable; before r16 it would
-        crash on an unresolved adaptive modulus)."""
+        check_config must adopt the pinned bucket modulus instead of
+        crashing on an unresolved adaptive modulus."""
         from odibi_spark.llm.incremental import SignatureStore
 
         first = SignatureStore(spark, str(tmp_path / "s"), n_buckets=16)
@@ -194,18 +173,22 @@ class TestAppendOrderingR16:
             "b2",
         )
         assert second.n_buckets == 16
-        meta = json.load(open(tmp_path / "s" / "_store_meta.json"))
+        meta = json.load(open(tmp_path / "s" / "_log" / "0"))["identity"]
         assert meta["n_buckets"] == 16
         # all bands of both batches live under the one modulus
-        assert {
-            d for d in os.listdir(tmp_path / "s" / "bands")
-            if d.startswith("batch_id=")
-        } == {"batch_id=b1", "batch_id=b2"}
+        entries = [
+            json.load(open(tmp_path / "s" / "_log" / str(i))) for i in (0, 1)
+        ]
+        assert [e["batch_id"] for e in entries] == ["b1", "b2"]
+        assert all(0 <= b < 16 for e in entries for b in e["parts"])
+        assert set(os.listdir(tmp_path / "s" / "data")) == {
+            e["data"] for e in entries
+        }
 
     def test_bytes_aware_adaptive_buckets(self, spark, tmp_path):
         """r16 (VERDICT r15 #8): the adaptive modulus sizes buckets on
         estimated bytes (rows x band-row width), not rows alone, and
-        the meta records the sizing inputs."""
+        entry 0 records the sizing inputs."""
         from odibi_spark.llm.incremental import (
             _adaptive_buckets, _band_row_bytes, SignatureStore,
         )
@@ -222,27 +205,6 @@ class TestAppendOrderingR16:
         )
         store = SignatureStore(spark, str(tmp_path / "s"))
         store.append(self._sigs(spark).localCheckpoint(eager=True), "b1")
-        meta = json.load(open(tmp_path / "s" / "_store_meta.json"))
+        meta = json.load(open(tmp_path / "s" / "_log" / "0"))["identity"]
         assert meta["band_row_bytes"] == _band_row_bytes(True, "xxhash64", 4)
         assert meta["bucket_target_bytes"] == 20_000_000
-
-    def test_sigs_without_meta_rebuild_path_still_serial(
-        self, spark, tmp_path
-    ):
-        """The r15 crash-replay rebuild (sigs exist, meta missing)
-        keeps working: meta re-resolved from the WHOLE store, earlier
-        batches re-banded."""
-        from odibi_spark.llm.incremental import SignatureStore
-
-        store = SignatureStore(spark, str(tmp_path / "s"))
-        s1 = self._sigs(spark).localCheckpoint(eager=True)
-        store.append(s1, "b1")
-        os.remove(tmp_path / "s" / "_store_meta.json")
-        import shutil
-
-        shutil.rmtree(tmp_path / "s" / "bands")
-        replay = SignatureStore(spark, str(tmp_path / "s"))
-        s2 = self._sigs(spark, ids=range(9, 14)).localCheckpoint(eager=True)
-        replay.append(s2, "b2")
-        bands = replay.read_bands()
-        assert bands.count() == (s1.count() + s2.count()) * 8
